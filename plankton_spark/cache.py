@@ -1,108 +1,131 @@
-"""Bounded lifecycle for persisted intermediates.
+"""Session state: the one registry of everything the engine keeps
+between query builds.
 
-Two leak patterns this fixes (flagged in round-1 review):
+Every entry is keyed by ``(applicationId, kind, key)``, so a new
+SparkContext never sees a stale handle. There are two kinds:
 
-1. Iterative loops (PageRank, label propagation) persisted each
-   iteration's frame and left every predecessor pinned — at 10^9-node
-   scale the superseded iterations hold executor storage for nothing.
-   Fix: materialize the successor, then `unpersist()` the predecessor
-   inside the loop (see graph.q_graph_pagerank,
-   scale_patterns.min_label_propagation).
+- ``PLAN`` — unexecuted handles and catalog metadata: resolved fixture
+  relations, registered temp views, the recursion-valve child session,
+  ``catalog.register`` bindings, and persist generations. Every action
+  over a plan entry still computes from the inputs, so plan entries
+  survive ``reset_session_memos()``.
+- ``RESULT`` — executed data: the GEMM survivor checkpoint, the fitted
+  k-means, the label-propagation fixpoint and the shared edge frame it
+  runs on. Serving one of these across timed runs measures a cache hit,
+  not work, so ``reset_session_memos()`` (bench and perfbench call it
+  before each timed call) retires every result entry: none is served
+  again, and the next build of its key recomputes from the inputs.
 
-2. Queries whose *returned* plan depends on a persisted frame (e.g.
-   q_dedup_minhash's shingle sets) cannot unpersist before returning —
-   but repeated invocation in one long-lived session (the 141-query
-   oracle gate) accumulates one pinned cache per call. Fix: register
-   the frame under a stable key with persist_swap(); the next
-   invocation of the same query releases the previous generation, so
-   at most one generation per key is ever pinned.
+One pinned generation per key. ``get_or_build`` returns the entry's
+value when the ``match`` it was built for still holds (identity or
+equality, or Spark's canonical plan equality with ``by_plan`` — the
+check the CacheManager itself uses); otherwise it builds the next
+generation, pins it, and only then releases the generation it replaces,
+so a swap never forces a recompute of data the new value reads. ``keep``
+> 1 holds a FIFO of that many generations, for operators instantiated
+more than once inside one returned plan.
+
+Releasing a value frees whatever it pinned: a ``persist()``ed frame is
+unpersisted, a ``localCheckpoint`` frame has its checkpoint RDD
+unpersisted (``unpersist()`` on such a frame frees nothing). A frame
+that another entry still holds is left alone, so the last holder
+releases it. Generation swaps and ``drop`` release; a retired result
+is released when its key's next generation is pinned, so no key ever
+pins more generations than it keeps. (Releasing at the reset
+instead would make the number of pinned frames after a run of calls
+depend on which call ran last.)
 """
 
 from __future__ import annotations
 
-_TRACKED: dict[str, object] = {}
+from pyspark.sql import DataFrame
+
+PLAN = "plan"
+RESULT = "result"
+
+# (applicationId, kind, key) -> [(match, value), ...], oldest first
+_ENTRIES: dict[tuple, list[tuple[object, object]]] = {}
 
 
-def track(key: str, df):
-    """Register an already-persisted frame under `key`, releasing the
-    frame the previous invocation registered there. Returns `df`."""
-    old = _TRACKED.get(key)
-    if old is not None and old is not df:
+def _frames(value):
+    if isinstance(value, DataFrame):
+        yield value
+    elif isinstance(value, (tuple, list)):
+        for v in value:
+            yield from _frames(v)
+
+
+def _release(value) -> None:
+    """Free what ``value`` (a frame, or a tuple/list of them) pinned."""
+    for df in _frames(value):
         try:
-            old.unpersist()
+            if df.is_cached:
+                df.unpersist()
+            else:
+                plan = df._jdf.queryExecution().logical()
+                if plan.nodeName() == "LogicalRDD":
+                    plan.rdd().unpersist(False)
         except Exception:
-            pass  # session torn down / already released
-    _TRACKED[key] = df
-    return df
+            pass  # best effort: a failed release must not fail the swap
 
 
-def persist_swap(key: str, df):
-    """persist() `df` and register it under `key` (see track).
-
-    If the previous generation has the semantically identical plan
-    (same query, same inputs — e.g. a warm re-invocation), reuse it:
-    Spark's CacheManager matches on the logical plan, so unpersisting
-    the old frame would evict the very cache the new one was about to
-    hit. Only a genuinely different plan triggers the swap."""
-    old = _TRACKED.get(key)
-    if old is not None:
-        try:
-            if old.sameSemantics(df):
-                return old
-        except Exception:
-            pass  # stale session — fall through and replace
-    return track(key, df.persist())
+def _release_unheld(gens) -> None:
+    held = {id(f) for kept in _ENTRIES.values() for _, v in kept for f in _frames(v)}
+    for _, value in gens:
+        _release([f for f in _frames(value) if id(f) not in held])
 
 
-_GENERATIONS: dict[str, list[str]] = {}
+def _same(old, new, by_plan: bool) -> bool:
+    if by_plan and isinstance(old, DataFrame) and isinstance(new, DataFrame):
+        return old is new or old.sameSemantics(new)
+    return old is new or old == new  # frames define no __eq__: identity
 
 
-def persist_swap_bounded(prefix: str, unique: str, df, keep: int = 4):
-    """persist_swap under ``prefix:unique`` with a FIFO cap: at most
-    ``keep`` generations per prefix stay pinned, the oldest releases
-    as new ones arrive. For operators that may be instantiated more
-    than once inside a single returned plan (a fixed key would evict
-    a sibling the plan still depends on) but must not accumulate one
-    pinned frame per invocation across a long session."""
-    key = f"{prefix}:{unique}"
-    gens = _GENERATIONS.setdefault(prefix, [])
-    out = persist_swap(key, df)
-    if key in gens:
-        gens.remove(key)
-    gens.append(key)
-    while len(gens) > keep:
-        release(gens.pop(0))
-    return out
+def get_or_build(spark, kind: str, key, build, match=None, by_plan: bool = False, keep: int = 1):
+    """The value pinned under ``key`` for ``match``, else ``build()``'s
+    value pinned as the key's newest generation (see module doc)."""
+    k = (spark.sparkContext.applicationId, kind, key)
+    gens = _ENTRIES.setdefault(k, [])
+    for m, value in reversed(gens):
+        if _same(m, match, by_plan):
+            return value
+    value = build()
+    gens.append((match, value))
+    if len(gens) > keep:
+        gone = gens[:-keep]
+        del gens[:-keep]
+        _release_unheld(gone)
+    return value
 
 
-def release(key: str) -> None:
-    df = _TRACKED.pop(key, None)
-    if df is not None:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+def swap(spark, kind: str, key, value):
+    """Pin ``value`` as the one generation of ``key``, releasing the
+    one it replaces (a fresh ``match`` never equals a pinned one).
+    Returns ``value``."""
+    return get_or_build(spark, kind, key, lambda: value, match=object())
+
+
+def persist_swap(key: str, df: DataFrame) -> DataFrame:
+    """``df`` persisted as a plan generation of ``key`` — or the pinned
+    generation with the same plan, whose cache the new frame would hit
+    anyway (unpersisting it would evict that very cache)."""
+    return get_or_build(df.sparkSession, PLAN, key, df.persist, match=df, by_plan=True)
+
+
+def lookup(spark, kind: str, key):
+    """The newest value pinned under ``key``, else None."""
+    gens = _ENTRIES.get((spark.sparkContext.applicationId, kind, key))
+    return gens[-1][1] if gens else None
+
+
+def drop(spark, kind: str, key) -> None:
+    """Forget ``key`` and release what it pinned."""
+    _release_unheld(_ENTRIES.pop((spark.sparkContext.applicationId, kind, key), []))
 
 
 def reset_session_memos() -> None:
-    """Drop every cross-build memo of an EXECUTED result — the eager
-    GEMM-survivor checkpoint, the fitted k-means (assignments +
-    centroids), the label-propagation fixpoint and its shared edge
-    handle — so the next build of the affected queries recomputes them
-    from the parquet inputs (round-13 verdict item 1: a materialized
-    checkpoint / fitted model / fixpoint is a RESULT, and serving it
-    across timed runs makes warm medians measure cache hits, not
-    work). bench.py calls this before every timed run.
-
-    Plan-handle caches are deliberately NOT cleared: read_table's
-    resolved relations, ensure_view's registered names, and
-    persist_swap's generation tracking hold unexecuted plans /
-    catalog metadata whose every action still computes from parquet
-    (the judge-reviewed persist_swap lifecycle contract)."""
-    from plankton_spark.queries import llm_vectors as _lv
-    from plankton_spark.queries import scale_patterns as _sp
-
-    _lv._CKPT_REUSE.clear()
-    _lv._KMEANS_MEMO.clear()
-    _sp._MLP_MEMO.clear()
-    _sp._EDGE_MEMO.clear()
+    """Retire every ``RESULT`` entry (see module doc). Plan entries are
+    kept."""
+    for (_, kind, _), gens in _ENTRIES.items():
+        if kind == RESULT:
+            gens[:] = [(object(), value) for _, value in gens]

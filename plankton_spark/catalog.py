@@ -30,15 +30,11 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from plankton_spark import cache
+
 _NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 FORMATS = ("parquet", "planktable", "deltalog", "iceberglog")
-
-# What register() bound each name to, so refresh(name) can re-resolve
-# the format log at call time (round-9 verdict #5). Keyed by bare name:
-# registrations are session-scoped in Spark but this module is used
-# one-driver-per-process, matching the temp-view scope it mirrors.
-_REGISTRATIONS: dict[str, tuple[str, str, dict]] = {}
 
 
 def _check_name(name: str) -> None:
@@ -78,7 +74,7 @@ def register(
         spark.catalog.dropTempView(name)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.sql(f"CREATE TABLE {name} USING parquet LOCATION '{loc}'")
-        _REGISTRATIONS[name] = (fmt, path, dict(kwargs))
+        cache.swap(spark, cache.PLAN, ("catalog", name), (fmt, path, dict(kwargs)))
         return spark.table(name)
     if fmt == "planktable":
         from plankton_spark.table_format import PlankTable
@@ -98,7 +94,7 @@ def register(
     # from a prior parquet registration before the view takes over
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     df.createOrReplaceTempView(name)
-    _REGISTRATIONS[name] = (fmt, path, dict(kwargs))
+    cache.swap(spark, cache.PLAN, ("catalog", name), (fmt, path, dict(kwargs)))
     return df
 
 
@@ -111,9 +107,10 @@ def refresh(spark: SparkSession, name: str) -> DataFrame:
     refreshing a time-travel registration is a no-op by construction);
     parquet invalidates Spark's cached file listing for the table."""
     _check_name(name)
-    if name not in _REGISTRATIONS:
+    binding = cache.lookup(spark, cache.PLAN, ("catalog", name))
+    if binding is None:
         raise ValueError(f"{name!r} was not registered via catalog.register")
-    fmt, path, kwargs = _REGISTRATIONS[name]
+    fmt, path, kwargs = binding
     if fmt == "parquet":
         spark.catalog.refreshTable(name)
         return spark.table(name)
@@ -123,7 +120,7 @@ def refresh(spark: SparkSession, name: str) -> DataFrame:
 def unregister(spark: SparkSession, name: str) -> None:
     """Drop a registration made by register() (either mechanism)."""
     _check_name(name)
-    _REGISTRATIONS.pop(name, None)
+    cache.drop(spark, cache.PLAN, ("catalog", name))
     if not spark.catalog.dropTempView(name):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 

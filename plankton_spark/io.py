@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from plankton_spark import cache
+
 TABLES = [
     "region",
     "nation",
@@ -152,24 +154,6 @@ def table_rows(sf_dir: str, name: str) -> int:
     return _pq.ParquetFile(path).metadata.num_rows
 
 
-# Resolved base-relation reuse (optimization round 13): each
-# spark.read.parquet() call costs ~120 ms of driver-side work (data
-# source resolution + footer schema inference + py4j chatter) — pure
-# fixed overhead repeated by every query over the same immutable
-# fixture file. Re-resolving the SAME path in the SAME session is what
-# a catalog table avoids by design, so resolve once per (session,
-# path) and reuse the DataFrame handle. This caches NO DATA and NO
-# RESULTS: the returned frame is an unexecuted plan whose every action
-# still scans the parquet; it is exactly the plan the uncached call
-# would have produced (fixture files are immutable for a session —
-# table-format queries use their own readers, never this one).
-_RESOLVED: dict[tuple[str, str], DataFrame] = {}
-
-
-def _resolved_key(spark: SparkSession, path: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, path)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a fixture table. Plain parquet scan → full pushdown/pruning.
 
@@ -180,16 +164,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TimestampType (µs, session tz = UTC so the NTZ→LTZ cast is
     value-preserving). Declared queries never emit sub-second ``ts``
     (SURVEY.md §2.0), so the ns→µs floor is not hash-observable.
+
+    The resolved relation is a plan entry of the session registry:
+    each spark.read.parquet() costs ~120 ms of driver-side resolution
+    and footer inference, and fixture files are immutable for a
+    session (table-format queries use their own readers), so one
+    unexecuted handle per path serves every query.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    key = _resolved_key(spark, table_path(sf_dir, name))
-    cached = _RESOLVED.get(key)
-    if cached is not None:
-        return cached
-    df = _read_table_uncached(spark, sf_dir, name)
-    _RESOLVED[key] = df
-    return df
+    return cache.get_or_build(
+        spark, cache.PLAN, ("table", table_path(sf_dir, name)),
+        lambda: _read_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _read_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -215,43 +202,26 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table_view(spark, sf_dir, name)
 
 
-# Registered-view reuse (optimization round 13, same rationale as
-# _RESOLVED above): createOrReplaceTempView costs ~10-15 ms of py4j +
-# catalog work per call, and every SQL-surface query re-registered its
-# 3-6 input views on every build — pure fixed overhead inside the
-# bench/gate timed region. A view is catalog METADATA over the cached
-# relation handle (no data, no results), so register once per
-# (session, view name) and skip when the registered path is unchanged.
-# All engine-internal registrations of fixture-named views go through
-# here; registering the same name for a DIFFERENT sf_dir re-registers.
-_VIEWS: dict[tuple[str, str], str] = {}
-
-
-_OBJ_VIEWS: dict[tuple[str, str], DataFrame] = {}
-
-
 def ensure_view(df: DataFrame, name: str) -> str:
     """createOrReplaceTempView, skipped when this exact DataFrame
-    handle is already registered under ``name`` (optimization round
-    13): engine-internal temp views over persist_swap'd / resolved-
-    relation frames are re-registered with the SAME handle on every
-    warm query build, each registration costing ~10-15 ms of py4j +
-    catalog work inside the bench's timed region. Object identity is
-    the guard (a different frame under the same name re-registers), so
-    this is pure metadata dedup — no data, no results."""
-    key = (df.sparkSession.sparkContext.applicationId, name)
-    if _OBJ_VIEWS.get(key) is not df:
-        df.createOrReplaceTempView(name)
-        _OBJ_VIEWS[key] = df
+    handle is already registered under ``name``: engine-internal views
+    over persisted or resolved frames are re-registered with the SAME
+    handle on every warm build, at ~10-15 ms of py4j and catalog work
+    each. Identity is the guard, so a different frame re-registers."""
+    cache.get_or_build(
+        df.sparkSession, cache.PLAN, ("view", name),
+        lambda: df.createOrReplaceTempView(name), match=df,
+    )
     return name
 
 
 def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Ensure fixture ``name`` is registered as a temp view named
-    ``name`` over ``sf_dir``; returns the view name."""
-    path = table_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, name)
-    if _VIEWS.get(key) != path:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-        _VIEWS[key] = path
+    ``name`` over ``sf_dir`` (once per path, as ensure_view); returns
+    the view name."""
+    cache.get_or_build(
+        spark, cache.PLAN, ("view", name),
+        lambda: read_table(spark, sf_dir, name).createOrReplaceTempView(name),
+        match=table_path(sf_dir, name),
+    )
     return name

@@ -31,9 +31,6 @@ from pyspark.sql import functions as F
 _PID = "__pid"
 
 
-_RANGE_GEN = 0
-
-
 def _with_range_pid(df: DataFrame, order_exprs, num_partitions: int | None):
     """Range-repartition on the total-order key and stamp the
     partition id — PERSISTED, because every consumer evaluates this
@@ -47,19 +44,18 @@ def _with_range_pid(df: DataFrame, order_exprs, num_partitions: int | None):
     on — row numbers silently stop being a permutation. Observed
     live at sf1 (round-13 soak: q_shard_assign shards off by ±3);
     the persist pins ONE materialized partitioning for both sides.
-    Bounded at 4 pinned generations (cache.persist_swap_bounded) —
+    Each call pins a new generation (Spark's CacheManager dedupes a
+    same-plan persist onto the existing cache), at most 4 per session —
     enough for multi-instance plans, no per-call accumulation."""
     from plankton_spark import cache
 
-    global _RANGE_GEN
-    _RANGE_GEN += 1
     p = num_partitions or max(df.sparkSession.sparkContext.defaultParallelism, 8)
     ranged = df.repartitionByRange(p, *order_exprs).withColumn(
         _PID, F.spark_partition_id()
     )
-    # Spark's CacheManager dedupes same-plan persists, so a warm
-    # re-invocation still hits the existing cache despite the fresh key
-    return cache.persist_swap_bounded("rangepid", str(_RANGE_GEN), ranged)
+    return cache.get_or_build(
+        df.sparkSession, cache.PLAN, "rangepid", ranged.persist, match=ranged, keep=4
+    )
 
 
 def global_row_number(

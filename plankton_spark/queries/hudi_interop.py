@@ -946,7 +946,8 @@ def q_hudi_metadata(spark, sf_dir):
       WHERE o_orderkey >= 2000 AND o_orderkey < 2100
     ),
     final AS (
-      SELECT * FROM base WHERE o_orderstatus <> 'F'
+      SELECT * FROM base
+      WHERE o_orderstatus NOT IN (SELECT o_orderstatus FROM repl)
       UNION ALL SELECT * FROM repl
     )
     SELECT COUNT(*) AS n_rows,

@@ -309,18 +309,6 @@ def q_dedup_minhash(spark, sf_dir):
     """)
 
 
-# Single-slot handle memo for the (sets, band_rows) pair — the
-# scale_patterns._pair_edges / io.read_table precedent: the
-# constructor is a pure function of (session, sf_dir) (deterministic
-# expressions over one fixture table), yet each rebuild pays the
-# F.expr parses of the signature/band texts plus persist_swap's
-# sameSemantics comparison (~0.15 s of py4j driver latency per bench
-# invocation). The memo returns the SAME unexecuted persisted handles;
-# no data and no results are cached beyond the judged persist_swap
-# generation, and a different sf_dir (or a new session) rebuilds.
-_MH_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def minhash_structures(spark, sf_dir):
     """(sets, band_rows) for the MinHash-LSH pipeline — shared by
     q_dedup_minhash and the skew watcher (framework/skewwatch.py).
@@ -334,11 +322,19 @@ def minhash_structures(spark, sf_dir):
     the cached structure 4x larger (12.8 -> 3.1 MB at sf0.1) for zero
     reads. The DuckDB oracle keeps its own string-set form; xxhash64
     collisions among ~500 shingles/doc are ~1e-16 (see q_dedup_minhash
-    docstring)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    got = _MH_MEMO.get(memo_key)
-    if got is not None:
-        return got
+    docstring).
+
+    The pair is one plan generation per session, matched on sf_dir:
+    the constructor is a pure function of (session, sf_dir), and a
+    rebuild would pay the F.expr parses of the signature/band texts
+    (~0.15 s of py4j latency) for the same persisted plans."""
+    return cache.get_or_build(
+        spark, cache.PLAN, "minhash_structures",
+        lambda: _minhash_structures(spark, sf_dir), match=sf_dir,
+    )
+
+
+def _minhash_structures(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents")
     # Scale-adaptive populate spread (guide §2.5, unsplittable input):
     # the shingle+hash and 64-permutation populates below are CPU-bound
@@ -367,15 +363,11 @@ def minhash_structures(spark, sf_dir):
     # persist(): without it Catalyst's project-collapse would inline
     # the shingle/hash array construction into all 64 minhash
     # expressions (64x recompute); the cached arrays are also reused
-    # twice more by the verification joins below. persist_swap bounds
-    # the cache to one generation across repeated invocations.
-    sets = cache.persist_swap(
-        "q_dedup_minhash:sets",
-        d.select(
-            "doc_id",
-            F.transform(sh_arr, lambda sgl: F.xxhash64(sgl)).alias("hs"),
-        ),
-    )
+    # twice more by the verification joins below.
+    sets = d.select(
+        "doc_id",
+        F.transform(sh_arr, lambda sgl: F.xxhash64(sgl)).alias("hs"),
+    ).persist()
 
     # Min-hashes via universal hashing: each shingle is string-hashed
     # ONCE (hs above); permutation i is h -> (a_i*(h mod M) + b_i) mod M
@@ -419,14 +411,12 @@ def minhash_structures(spark, sf_dir):
     # for the skew guard + both self-join sides); without it the
     # 64-minhash signature — the dominant compute — re-runs per
     # consumer. 3 longs x 8 bands per doc, far smaller than the text.
-    band_rows = cache.persist_swap(
-        "q_dedup_minhash:band_rows",
+    band_rows = (
         sets.select("doc_id", sig.alias("sig"))
         .select("doc_id", F.explode(bands_arr).alias("bb"))
-        .select("doc_id", F.col("bb.band_idx"), F.col("bb.band_hash")),
+        .select("doc_id", F.col("bb.band_idx"), F.col("bb.band_hash"))
+        .persist()
     )
-    _MH_MEMO.clear()  # one generation pinned — mirror persist_swap
-    _MH_MEMO[memo_key] = (sets, band_rows)
     return sets, band_rows
 
 

@@ -16,6 +16,7 @@ import numpy as np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from plankton_spark import cache
 from plankton_spark.functions import lit_array
 from plankton_spark.io import ensure_view, read_table, table_rows
 from plankton_spark.queries.llm_dedup import (
@@ -86,39 +87,18 @@ GEMM_BLOCKS = 4
 # the survivor frame does not), so the threshold is now 0.
 GEMM_TOPK_CHECKPOINT_MIN_ROWS = 0
 
-# Semantic-keyed reuse of the eager survivor checkpoint (optimization
-# round 13, same lifecycle contract as cache.persist_swap): the eager
-# localCheckpoint re-executed the applyInPandas GEMM kernel on EVERY
-# query construction — ~0.65 s of the warm build phase — even though a
-# warm rebuild produces the semantically identical plan over the same
-# immutable fixture. Key by the blocking parameters, then verify with
-# sameSemantics (Spark's canonical plan equality — the same check
-# CacheManager uses), so a genuinely different input plan (new sf_dir,
-# changed corpus) re-checkpoints and replaces the generation. One
-# generation per key stays referenced; the frame is margin-cut-bounded
-# (≤ ~(k+margin-window)·n_queries rows) at any corpus size. This
-# caches an INTERMEDIATE inside the session exactly like the persisted
-# minhash shingle frames (judge-reviewed design). Round 14 (r13 verdict
-# item 1): an EXECUTED checkpoint is a result, so the bench clears this
-# memo via cache.reset_session_memos() before every timed run — warm
-# medians price one full kernel execution; the memo still bounds
-# re-execution inside one long-lived gate/user session.
-_CKPT_REUSE: dict[tuple[str, str], tuple[object, object]] = {}
-
-
+# The eager survivor checkpoint is a result entry of the session
+# registry, matched by sameSemantics on the kernel frame: a warm
+# rebuild over the same immutable fixture produces the identical plan,
+# and re-checkpointing would re-execute the applyInPandas GEMM kernel
+# (~0.65 s of the warm build) inside one long-lived gate or user
+# session. The frame is margin-cut-bounded (≤ ~(k+margin-window)·
+# n_queries rows) at any corpus size.
 def _checkpoint_reuse(key: str, frame):
-    spark = frame.sparkSession
-    full_key = (spark.sparkContext.applicationId, key)
-    prev = _CKPT_REUSE.get(full_key)
-    if prev is not None:
-        try:
-            if prev[0].sameSemantics(frame):
-                return prev[1]
-        except Exception:
-            pass  # stale session — fall through and replace
-    ckpt = frame.localCheckpoint(eager=True)
-    _CKPT_REUSE[full_key] = (frame, ckpt)
-    return ckpt
+    return cache.get_or_build(
+        frame.sparkSession, cache.RESULT, key,
+        lambda: frame.localCheckpoint(eager=True), match=frame, by_plan=True,
+    )
 
 
 def _gemm_topk_candidates(spark, embeddings, n_queries, k, margin=1e-5,
@@ -1130,7 +1110,6 @@ def kmeans_assign_two_level_df(
     import numpy as np
     import pandas as pd
 
-    from plankton_spark import cache as _cache
     from plankton_spark.operators.ranking import global_row_number
 
     spark = e.sparkSession
@@ -1168,7 +1147,7 @@ def kmeans_assign_two_level_df(
         _home, "k long, cvec array<bigint>, cell_raw long"
     )
     if cache_key is not None:
-        homed = _cache.persist_swap(cache_key, homed)
+        homed = cache.persist_swap(cache_key, homed)
     # dense cell ids in sorted-raw order (the dict path's remap rule)
     cells = sorted(
         r["cell_raw"] for r in homed.select("cell_raw").distinct().collect()
@@ -1215,19 +1194,6 @@ def kmeans_assign_two_level_df(
     return _two_level_phases(e, fine_df, coarse, r_arr)
 
 
-# Session memo for the deterministic k-means fit (optimization round
-# 13, the _pair_edges/read_table handle-memo precedent): the fit is a
-# pure function of (session, sf_dir, k) — integer-quantized input,
-# deterministic seeds, fixed iteration count — and q_dedup_semantic /
-# q_dedup_semantic_far each ran the full Lloyd loop (one scan + one
-# driver collect per iteration) over the identical inputs in one gate
-# session. One generation kept per (sf_dir, k); the assignment frame
-# stays a persisted intermediate, every first computation still runs
-# from parquet. Round 14: a fitted model is a RESULT, so the bench
-# clears this memo before every timed run (cache.reset_session_memos).
-_KMEANS_MEMO: dict[tuple[str, str, int | None], tuple] = {}
-
-
 def kmeans_fit_assign(spark, sf_dir, k: int | None = KMEANS_K):
     """The deterministic integer k-means fit+assign shared by
     q_cluster_kmeans (k=KMEANS_K, the declared K=4 contract) and the
@@ -1240,29 +1206,24 @@ def kmeans_fit_assign(spark, sf_dir, k: int | None = KMEANS_K):
     is the 100 TB path. Assignment switches from per-row literal argmin
     to the Arrow integer-GEMM pass above LITERAL_ASSIGN_MAX_K (both
     exact-integer, pinned equal in tests/test_kmeans_adaptive.py). See
-    q_cluster_kmeans's docstring for the determinism argument."""
+    q_cluster_kmeans's docstring for the determinism argument.
+
+    The fit is a result entry per (sf_dir, k): it is a pure function
+    of them (integer-quantized input, deterministic seeds, fixed
+    iteration count), and q_dedup_semantic / q_dedup_semantic_far share
+    one Lloyd loop between resets."""
     # the path thresholds are part of the key: tests monkeypatch them
-    # to force the distributed/GEMM branches, and a memo hit across a
+    # to force the distributed/GEMM branches, and a hit across a
     # patched threshold would return the wrong representation
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        k,
-        TWO_LEVEL_MIN_K,
-        LITERAL_ASSIGN_MAX_K,
+    return cache.get_or_build(
+        spark, cache.RESULT,
+        ("kmeans", sf_dir, k, TWO_LEVEL_MIN_K, LITERAL_ASSIGN_MAX_K),
+        lambda: _kmeans_fit_assign_impl(spark, sf_dir, k),
     )
-    got = _KMEANS_MEMO.get(key)
-    if got is not None:
-        return got
-    out = _kmeans_fit_assign_impl(spark, sf_dir, k)
-    _KMEANS_MEMO[key] = out
-    return out
 
 
 def _kmeans_fit_assign_impl(spark, sf_dir, k: int | None):
     import math
-
-    from plankton_spark import cache as _cache
 
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1280,7 +1241,7 @@ def _kmeans_fit_assign_impl(spark, sf_dir, k: int | None):
     # lifetime across invocations) instead of re-reading + re-quantizing
     # the parquet per pass; MEMORY_AND_DISK default spills gracefully
     # when the corpus outgrows executor storage
-    e = _cache.persist_swap(f"kmeans:quantized:{sf_dir}", e)
+    e = cache.persist_swap(f"kmeans:quantized:{sf_dir}", e)
     if k is None:
         # floor(sqrt) on an IEEE double matches DuckDB's FLOOR(SQRT())
         # exactly for counts < 2^52 (sqrt is correctly rounded).
@@ -1359,13 +1320,12 @@ def _fit_assign_distributed(spark, sf_dir, e, k: int):
     (the same DIV floor-mean aggregation, minus the driver rebuild).
     Assignment is kmeans_assign_two_level_df, whose driver state is
     the C-bounded coarse model only. Each centroid generation is
-    materialized BEFORE its predecessor is released (cache.track), so
+    materialized BEFORE its predecessor is released (cache.swap), so
     at most two generations are ever pinned and the swap never
     triggers a recompute. Returns (assignments, cents_df) — cents as
     a DataFrame, the contract difference the large-K regime exists
     for. Bit-equality with the dict path is pinned in
     tests/test_kmeans_adaptive.py."""
-    from plankton_spark import cache as _cache
     from plankton_spark.operators.ranking import global_row_number
 
     key = f"kmeans:cents:{sf_dir}"
@@ -1376,7 +1336,7 @@ def _fit_assign_distributed(spark, sf_dir, e, k: int):
         .persist()
     )
     cents.count()  # materialize this generation
-    cents = _cache.track(key, cents)
+    cents = cache.swap(spark, cache.PLAN, key, cents)
     fine_key = f"kmeans:twolevel:fine:{sf_dir}"
     for _ in range(KMEANS_ITERS - 1):
         new_cents = (
@@ -1392,7 +1352,7 @@ def _fit_assign_distributed(spark, sf_dir, e, k: int):
             .persist()
         )
         new_cents.count()  # materialize BEFORE releasing the predecessor
-        cents = _cache.track(key, new_cents)
+        cents = cache.swap(spark, cache.PLAN, key, new_cents)
     return kmeans_assign_two_level_df(e, cents, cache_key=fine_key), cents
 
 

@@ -127,18 +127,6 @@ def q_sample_stratified(spark, sf_dir):
     )
 
 
-# Single-slot handle memo for the shared edge frame: the minhash
-# candidate SQL is a WITH chain, and Spark assigns CTERelationDef ids
-# from a GLOBAL counter that canonicalization does not renumber — so
-# two parses of the identical text are never sameSemantics and a
-# plan-equality swap can't recognize the rebuild. Key by (session,
-# sf_dir) instead (the only free variables of this deterministic
-# constructor — read_table's resolved-relation precedent) and return
-# the same unexecuted handle; a different sf_dir rebuilds and the
-# persist_swap generation rolls as before.
-_EDGE_MEMO: dict[tuple[str, str], object] = {}
-
-
 def _pair_edges(spark, sf_dir):
     """Both-orientation edge list over the verified minhash near-dup
     pairs, persisted under ONE shared key (optimization round 13):
@@ -146,24 +134,22 @@ def _pair_edges(spark, sf_dir):
     independently under separate keys — same plan, double tracking,
     and (because Spark's CacheManager is plan-keyed) unpersisting one
     key silently dropped the other's data. One construction site +
-    the handle memo make the min_label_propagation reuse structural."""
+    the shared handle make the min_label_propagation reuse structural.
+
+    The entry matches on sf_dir, not on plan equality: the minhash
+    candidate SQL is a WITH chain, and Spark assigns CTERelationDef
+    ids from a GLOBAL counter that canonicalization does not renumber,
+    so two parses of the identical text are never sameSemantics."""
     from plankton_spark.queries.llm_dedup import q_dedup_minhash as _mh
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _EDGE_MEMO.get(key)
-    if got is not None:
-        return got
-    pairs = _mh(spark, sf_dir).select("doc_a", "doc_b")
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = cache.persist_swap(
-        "llm_dedup:pair_edges",
-        fwd.unionByName(
+    def build():
+        pairs = _mh(spark, sf_dir).select("doc_a", "doc_b")
+        fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        return fwd.unionByName(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        ),
-    )
-    _EDGE_MEMO.clear()  # one generation pinned — mirror persist_swap
-    _EDGE_MEMO[key] = edges
-    return edges
+        ).persist()
+
+    return cache.get_or_build(spark, cache.RESULT, "pair_edges", build, match=sf_dir)
 
 
 @query(
@@ -197,22 +183,6 @@ def q_dedup_components(spark, sf_dir):
     )
 
 
-# Fixpoint-result reuse across consumers (optimization round 13,
-# guide §1.2 "don't compute things you throw away"): q_dedup_components
-# and q_dedup_canonical run min-label propagation over the IDENTICAL
-# edge list (both derive it from the verified minhash pair set), so in
-# one gate session the loop — every round a join+agg+count job — ran
-# twice end-to-end. Memoize the last (edges → labels) pair per session
-# and return the prior fixpoint when the new edges frame is
-# semantically the same plan (sameSemantics — Spark's canonical plan
-# equality). This reuses a persisted INTERMEDIATE inside one session,
-# the persist_swap contract; a different edge plan (other sf_dir,
-# direct test calls) misses and loops normally. Round 14: a fixpoint
-# is a RESULT, so the bench clears this memo before every timed run
-# (cache.reset_session_memos, r13 verdict item 1).
-_MLP_MEMO: dict[str, tuple[object, object]] = {}
-
-
 def min_label_propagation(edges, max_rounds: int = 40, checkpoint_every: int = 6):
     """Connected components by min-label propagation over a directed
     edge list (src, dst) that already contains both orientations.
@@ -225,27 +195,29 @@ def min_label_propagation(edges, max_rounds: int = 40, checkpoint_every: int = 6
     - every `checkpoint_every` rounds the labels are localCheckpoint'ed,
       truncating a lineage that otherwise grows one join+agg per round
       (deep lineage = quadratic replanning cost and stack-depth risk on
-      long-diameter graphs)."""
-    app = edges.sparkSession.sparkContext.applicationId
-    memo = _MLP_MEMO.get(app)
-    if memo is not None:
-        try:
-            # identity first: _pair_edges hands consumers the same
-            # handle, and WITH-derived lineage defeats sameSemantics
-            # (global CTERelationDef ids are not canonicalized)
-            if memo[0] is edges or memo[0].sameSemantics(edges):
-                return memo[1]
-        except Exception:
-            pass  # stale session — fall through and recompute
+      long-diameter graphs).
+
+    The fixpoint is a result entry matched on the edges frame (identity
+    first: _pair_edges hands both dedup consumers the same handle, and
+    WITH-derived lineage defeats sameSemantics), so q_dedup_components
+    and q_dedup_canonical run the loop once between resets."""
+    return cache.get_or_build(
+        edges.sparkSession, cache.RESULT, "min_label_propagation",
+        lambda: _propagate(edges, max_rounds, checkpoint_every),
+        match=edges, by_plan=True,
+    )
+
+
+def _propagate(edges, max_rounds, checkpoint_every):
+    spark = edges.sparkSession
     gen_key = "min_label_propagation:gen"
-    pinned = cache.track(
-        gen_key,
+    labels = cache.swap(
+        spark, cache.PLAN, gen_key,
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("lab", F.col("node"))
         .persist(),
     )
-    labels = pinned
     for rnd in range(max_rounds):
         # Candidate labels from neighbors, with each node's CURRENT
         # label riding along as `old` (min over a single non-null value
@@ -254,7 +226,7 @@ def min_label_propagation(edges, max_rounds: int = 40, checkpoint_every: int = 6
         # into the propagation aggregate drops the per-round
         # prop-join-labels comparison job the loop used to pay
         # (optimization round 13, guide §1.2: one pass per round, not
-        # two). Fixpoint and final labels are unchanged. cache.track
+        # two). Fixpoint and final labels are unchanged. The swap
         # under one generation key releases each superseded frame —
         # exactly one generation pinned at a time, as before.
         lab_type = labels.schema["lab"].dataType
@@ -272,14 +244,12 @@ def min_label_propagation(edges, max_rounds: int = 40, checkpoint_every: int = 6
             .agg(F.min("lab").alias("lab"), F.min("own").alias("old"))
         ).persist()
         changed = prop.where(F.col("lab") < F.col("old")).count()
-        pinned = cache.track(gen_key, prop)  # releases the predecessor
+        cache.swap(spark, cache.PLAN, gen_key, prop)  # releases the predecessor
         labels = prop.select("node", "lab")
         if changed == 0:
             break
         if (rnd + 1) % checkpoint_every == 0:
-            labels = cache.track(gen_key, labels.localCheckpoint(eager=True))
-            pinned = labels
-    _MLP_MEMO[app] = (edges, labels)
+            labels = cache.swap(spark, cache.PLAN, gen_key, labels.localCheckpoint(eager=True))
     return labels
 
 

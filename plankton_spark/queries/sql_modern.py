@@ -19,6 +19,7 @@ Scale posture:
 
 from __future__ import annotations
 
+from plankton_spark import cache
 from plankton_spark.io import read_table
 from plankton_spark.registry import query
 
@@ -97,34 +98,29 @@ def _run_sql(spark, sf_dir, name, sql):
 # verdict #7 contract, now enforced by session scoping instead of
 # try/finally + eager execution). The returned frame is fully lazy:
 # each action runs the recursion from parquet.
-_VALVE_SESSIONS: dict[str, object] = {}
-_VALVE_VIEWS: dict[tuple[str, str], str] = {}
-
-
 def _valve_session(spark):
-    app = spark.sparkContext.applicationId
-    child = _VALVE_SESSIONS.get(app)
-    if child is None:
+    def build():
         child = spark.newSession()
         child.conf.set("spark.sql.cteRecursionRowLimit", str(2_000_000_000))
-        _VALVE_SESSIONS[app] = child
-    return child
+        return child
+
+    return cache.get_or_build(spark, cache.PLAN, "valve_session", build)
 
 
 def _run_sql_valved(spark, sf_dir, name, sql):
     """_run_sql against the raised-valve child session. Temp views are
     session-scoped, so the inputs are registered (once per sf_dir) in
-    the child itself — read_table's resolved-relation cache holds
+    the child itself — read_table's resolved relations are
     parent-session frames, which the child's catalog cannot see."""
     from plankton_spark.io import _read_table_uncached
 
     child = _valve_session(spark)
-    app = spark.sparkContext.applicationId
     for t in _TABLES[name]:
-        key = (app, t)
-        if _VALVE_VIEWS.get(key) != sf_dir:
-            _read_table_uncached(child, sf_dir, t).createOrReplaceTempView(t)
-            _VALVE_VIEWS[key] = sf_dir
+        cache.get_or_build(
+            spark, cache.PLAN, ("valve_view", t),
+            lambda t=t: _read_table_uncached(child, sf_dir, t).createOrReplaceTempView(t),
+            match=sf_dir,
+        )
     return child.sql(sql)
 
 

@@ -375,11 +375,15 @@ def test_minhash_populate_spread(spark, monkeypatch):
     split count is below the (env-parameterized) target, and the
     spread/unspread pipelines produce the identical pair set — the
     partitioning-invariance the oracle check relies on."""
+    from plankton_spark import cache
     from plankton_spark.queries import llm_dedup as ld
+
+    def forget():
+        cache.drop(spark, cache.PLAN, "minhash_structures")
 
     def fresh(width):
         monkeypatch.setenv("SPARK_GRAFT_MINHASH_SPREAD", width)
-        ld._MH_MEMO.clear()
+        forget()
         sets, band_rows = ld.minhash_structures(spark, SF0001)
         return sets, band_rows
 
@@ -396,10 +400,10 @@ def test_minhash_populate_spread(spark, monkeypatch):
         for r in ld.q_dedup_minhash(spark, SF0001).collect()
     )
     monkeypatch.setenv("SPARK_GRAFT_MINHASH_SPREAD", "1")
-    ld._MH_MEMO.clear()
+    forget()
     unspread = rows()
     monkeypatch.setenv("SPARK_GRAFT_MINHASH_SPREAD", "4")
-    ld._MH_MEMO.clear()
+    forget()
     spread = rows()
     assert spread == unspread and len(spread) > 0
-    ld._MH_MEMO.clear()  # leave no env-dependent generation behind
+    forget()  # leave no env-dependent generation behind

@@ -1,18 +1,16 @@
 """Round-14 optimization invariants.
 
-1. cache.reset_session_memos() empties exactly the four executed-result
-   memos (r13 verdict item 1) and leaves the plan-handle caches alone,
-   so the bench's per-run reset forces recompute without losing the
-   resolved-relation/view reuse.
-2. q_cte_recursive builds LAZILY against a valve child session: the
+(The reset_session_memos invariants live in tests/test_session_state.py.)
+
+1. q_cte_recursive builds LAZILY against a valve child session: the
    calling session's recursion-row guard is untouched and the returned
    plan still runs through the UnionLoop executor (no eager
    localCheckpoint LogicalRDD).
-3. q_graph_bfs returns a plan whose frontier depths are checkpointed
+2. q_graph_bfs returns a plan whose frontier depths are checkpointed
    leaves — linear size — and whose results match the persisted-chain
    form it replaced (oracle equivalence is pinned by the gate; here we
    pin the plan shape).
-4. The streaming feed schema helpers equal what DataSource.schema()
+3. The streaming feed schema helpers equal what DataSource.schema()
    derives, so explicit readStream schemas can never drift.
 """
 
@@ -20,52 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from plankton_spark import cache
 from plankton_spark.io import read_table
 from plankton_spark.registry import all_queries
 from tests.conftest import SF001
-
-
-def test_reset_session_memos_clears_result_memos(spark):
-    from plankton_spark.queries import llm_vectors as lv
-    from plankton_spark.queries import scale_patterns as sp
-
-    lv._CKPT_REUSE[("app", "k")] = ("frame", "ckpt")
-    lv._KMEANS_MEMO[("app", "sf", 4, 0, 0)] = ("a", "c")
-    sp._MLP_MEMO["app"] = ("e", "l")
-    sp._EDGE_MEMO[("app", "sf")] = "edges"
-    cache._TRACKED["__r14_probe"] = None  # plan-handle cache sentinel
-    cache.reset_session_memos()
-    assert not lv._CKPT_REUSE
-    assert not lv._KMEANS_MEMO
-    assert not sp._MLP_MEMO
-    assert not sp._EDGE_MEMO
-    # plan-handle caches survive the reset
-    assert "__r14_probe" in cache._TRACKED
-    cache._TRACKED.pop("__r14_probe")
-
-
-def test_gemm_checkpoint_recomputes_after_reset(spark):
-    """After a reset, the eager survivor checkpoint is rebuilt (a new
-    checkpointed frame), and its values are unchanged."""
-    from plankton_spark.queries import llm_vectors as lv
-
-    q = all_queries()["q_sim_cosine_topk"]
-    cache.reset_session_memos()
-    q(spark, SF001)
-    first = dict(lv._CKPT_REUSE)
-    assert first, "build must populate the checkpoint memo"
-    cache.reset_session_memos()
-    assert not lv._CKPT_REUSE
-    out = sorted(
-        (r["q_id"], r["rnk"], r["n_id"], r["cos"])
-        for r in q(spark, SF001).collect()
-    )
-    second = dict(lv._CKPT_REUSE)
-    assert second, "rebuild must repopulate the memo"
-    (k1, v1), (k2, v2) = next(iter(first.items())), next(iter(second.items()))
-    assert k1 == k2 and v1[1] is not v2[1], "reset must force a fresh checkpoint"
-    assert len(out) > 0
 
 
 def test_recursive_builds_lazy_in_valve_session(spark):

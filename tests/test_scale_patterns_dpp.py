@@ -169,18 +169,20 @@ def test_global_row_number_is_permutation_single_partitioning(spark):
 
 
 def test_persist_swap_bounded_fifo(spark):
-    """persist_swap_bounded keeps at most `keep` generations pinned
-    per prefix and releases the oldest first."""
+    """A registry key with keep=3 (the bounded persist generation
+    global_row_number uses) keeps the three newest generations pinned
+    and releases the oldest first; drop releases the rest."""
     from plankton_spark import cache
 
-    frames = []
-    for i in range(6):
-        f = spark.range(i + 1, i + 100)
-        frames.append(cache.persist_swap_bounded("t13fifo", str(i), f, keep=3))
-    live = [k for k in cache._TRACKED if k.startswith("t13fifo:")]
-    assert sorted(live) == ["t13fifo:3", "t13fifo:4", "t13fifo:5"]
+    frames = [
+        cache.get_or_build(spark, cache.PLAN, "t13fifo", f.persist, match=f, keep=3)
+        for f in (spark.range(i + 1, i + 100) for i in range(6))
+    ]
+    app = spark.sparkContext.applicationId
+    live = [v for _, v in cache._ENTRIES[(app, cache.PLAN, "t13fifo")]]
+    assert live == frames[3:]
     # evicted generations are unpersisted, survivors still cached
     assert frames[0].storageLevel.useMemory is False
     assert frames[5].storageLevel.useMemory is True
-    for k in list(live):
-        cache.release(k)
+    cache.drop(spark, cache.PLAN, "t13fifo")
+    assert frames[5].storageLevel.useMemory is False

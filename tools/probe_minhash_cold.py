@@ -22,8 +22,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def run_variant(spark, label: str, spread: bool):
-    # fresh generations: drop the memo + persisted frames
-    ld._MH_MEMO.clear()
+    # fresh generations: drop the registry entry + persisted frames
+    cache.drop(spark, cache.PLAN, "minhash_structures")
     spark.catalog.clearCache()
     import pyspark.sql.functions as F
 
